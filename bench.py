@@ -73,7 +73,9 @@ N_INGEST_EVENTS = 50_000
 # the r13 perf window showed 14 untouched queries "regressing" 1.5-3.5x
 # purely from host phase; dividing by the canary ratio separates host
 # from code.  DO NOT OPTIMIZE OR TOUCH THIS JOB — its value is that its
-# cost is code-frozen across rounds.
+# cost is code-frozen across rounds.  The summed hash is reduced mod a
+# prime first: a raw xxhash64 sum overflows a long, which ANSI mode
+# (pinned on by session.get_spark) raises as ARITHMETIC_OVERFLOW.
 CANARY_ROWS = 8_000_000
 
 
@@ -88,7 +90,7 @@ def canary_bench(spark) -> float:
             spark.range(0, CANARY_ROWS)
             .select(
                 (F.col("id") % 100_000).alias("k"),
-                F.xxhash64("id").alias("h"),
+                (F.xxhash64("id") % F.lit(1_000_003)).alias("h"),
             )
             .groupBy("k")
             .agg(F.sum("h").alias("s"), F.count("*").alias("n"))
@@ -308,18 +310,14 @@ def streaming_latency_bench(spark, sf_dir: str, n_files: int = 8) -> dict:
     the `*_rocksdb` keys are the recorded form of that
     provider-agnosticism at bench scale.
 
-    Round 10 (VERDICT r9 item 6): the streaming queries run at 8 state
-    partitions instead of the session's 32.  A watermarked stream-stream
+    The streaming queries here run at a fixed 8 state partitions so the
+    series stays comparable across rounds.  A watermarked stream-stream
     join instantiates FOUR state stores per shuffle partition, each
-    paying commit/snapshot overhead EVERY micro-batch regardless of row
-    volume, so at ~12.5k rows/batch the partition count WAS the p50
-    floor: tools/ab_stream_join.py measured the outer join at 4.52 s
-    p50 @32 partitions -> 1.89 @16 -> 1.03 @8 -> 0.94 @4 (RocksDB
-    4.13 -> 1.19 @8) with identical results — per-partition fixed cost,
-    not data.  8 partitions ≈ 1.5k rows/partition/batch keeps real
-    parallelism while sizing state stores to the volume; a production
-    deployment sizes this knob to its own batch volume (the same
-    spark.sql.shuffle.partitions discipline the batch tier documents)."""
+    paying a commit EVERY micro-batch regardless of row volume, so the
+    partition count sets the per-batch floor.  The s_* operators size
+    their state partitions to the staged input instead
+    (streaming.runner.run_to_memory); SCALE.md §"Streaming
+    state-partition sizing" has the measurement."""
     import shutil
     import statistics as _st
 

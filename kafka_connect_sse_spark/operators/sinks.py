@@ -190,7 +190,7 @@ def snk_memory_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").cast("string").alias("id"),
         F.col("props").alias("data"),
     )
-    landed = run_to_memory(envelope, mode="append")
+    landed = run_to_memory(envelope, sf_dir, mode="append")
     return landed.groupBy("event").agg(F.count("*").alias("n"))
 
 

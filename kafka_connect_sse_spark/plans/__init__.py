@@ -97,10 +97,21 @@ def _scan_partitions(df: DataFrame) -> int:
     come from the local filesystem; a non-local path (real deployments,
     where tables have thousands of splits and spread() is a no-op by
     design) returns a large count so the caller skips the repartition.
-    Memoized per (session, file set) — fixtures are immutable."""
+    Memoized per (session, file set, split confs) — fixtures are
+    immutable."""
     sc = df.sparkSession.sparkContext
+    conf = df.sparkSession.conf
+    # byte confs read back as set ("128MB", "134217728b"): parse them with
+    # Spark's own suffix rules; both have engine defaults
+    to_bytes = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    max_split = to_bytes(conf.get("spark.sql.files.maxPartitionBytes"))
+    open_cost = to_bytes(conf.get("spark.sql.files.openCostInBytes"))
+    min_parts = conf.get("spark.sql.files.minPartitionNum", None) or conf.get(
+        "spark.sql.leafNodeDefaultParallelism", None
+    )
+    min_parts = int(min_parts) if min_parts else sc.defaultParallelism
     files = tuple(sorted(df.inputFiles()))
-    key = (id(df.sparkSession), files)
+    key = (id(df.sparkSession), files, max_split, open_cost, min_parts)
     hit = _SCAN_PARTS_CACHE.get(key)
     if hit is not None:
         return hit
@@ -111,14 +122,6 @@ def _scan_partitions(df: DataFrame) -> int:
             _SCAN_PARTS_CACHE[key] = 1 << 30  # non-local: treat as plenty
             return _SCAN_PARTS_CACHE[key]
         sizes.append(os.path.getsize(path))
-    conf = df.sparkSession.conf
-    # byte confs come back as "134217728b"; both have engine defaults
-    max_split = int(conf.get("spark.sql.files.maxPartitionBytes").rstrip("b"))
-    open_cost = int(conf.get("spark.sql.files.openCostInBytes").rstrip("b"))
-    min_parts = conf.get("spark.sql.files.minPartitionNum", None) or conf.get(
-        "spark.sql.leafNodeDefaultParallelism", None
-    )
-    min_parts = int(min_parts) if min_parts else sc.defaultParallelism
     total = sum(s + open_cost for s in sizes)
     split_bytes = min(max_split, max(open_cost, total // max(min_parts, 1)))
     splits = []

@@ -35,6 +35,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # overflow and invalid-cast behaviour is query semantics: pin it
+        # rather than inherit the release's default
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -54,4 +57,5 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     created session (the correctness driver hands us its own session)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
     return spark

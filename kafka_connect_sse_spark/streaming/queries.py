@@ -57,7 +57,7 @@ def s_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return run_to_memory(agg, mode="complete")
+    return run_to_memory(agg, sf_dir, mode="complete")
 
 
 @register(
@@ -82,7 +82,7 @@ def s_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    return run_to_memory(agg, mode="complete")
+    return run_to_memory(agg, sf_dir, mode="complete")
 
 
 @register(
@@ -123,7 +123,7 @@ def s_window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return run_to_memory(agg, mode="complete")
+    return run_to_memory(agg, sf_dir, mode="complete")
 
 
 @register(
@@ -154,7 +154,7 @@ def s_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    return run_to_memory(agg, mode="append")
+    return run_to_memory(agg, sf_dir, mode="append")
 
 
 @register(
@@ -175,7 +175,7 @@ def s_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["user_id", "event_type", "day"])
         .select("user_id", "event_type", "day")
     )
-    return run_to_memory(dd, mode="append")
+    return run_to_memory(dd, sf_dir, mode="append")
 
 
 @register(
@@ -193,7 +193,7 @@ def s_join_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf.join(F.broadcast(dim), sdf.user_id == dim.c_custkey)
         .select("event_id", "user_id", "c_mktsegment", "event_type")
     )
-    return run_to_memory(joined, mode="append")
+    return run_to_memory(joined, sf_dir, mode="append")
 
 
 def _count_state(key, pdf_iter, state):
@@ -232,7 +232,7 @@ def s_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = run_to_memory(counted, mode="update")
+    out = run_to_memory(counted, sf_dir, mode="update")
     # update mode may emit a key multiple times across batches; keep the last
     return (
         out.groupBy("user_id")
@@ -294,7 +294,7 @@ def s_join_stream_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
         "inner",
     ).select("purchase_id", "click_id", "user_id")
-    return run_to_memory(joined, mode="append")
+    return run_to_memory(joined, sf_dir, mode="append")
 
 
 @register(
@@ -439,7 +439,7 @@ if _twis_available():  # pragma: no cover - environment-dependent
             outputMode="Update",
             timeMode="None",
         )
-        out = run_to_memory(counted, mode="update")
+        out = run_to_memory(counted, sf_dir, mode="update")
         # update mode may emit a key several times across batches; keep the last
         return (
             out.groupBy("user_id")
@@ -479,7 +479,7 @@ def s_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    return run_to_memory(dd, mode="append")
+    return run_to_memory(dd, sf_dir, mode="append")
 
 
 @register(
@@ -559,31 +559,26 @@ def s_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s_join_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream join: purchases with no click in the prior
     hour must still emit — with a NULL click — once the watermark proves
-    no matching click can ever arrive.  This is the hardest Structured
-    Streaming semantic to get right operationally: NULL-padded rows are
-    produced by STATE EVICTION, which only happens when a LATER batch
-    advances the watermark past the join window.  A bounded backfill
-    (one file, one batch) would therefore silently emit ZERO unmatched
-    rows — so this op stages the production 'sentinel flush' pattern:
-    two far-future flush files after the data file, maxFilesPerTrigger=1
-    forcing three micro-batches, the first flush advancing the watermark
-    past every real row and the second giving eviction a batch to emit
-    in.  Sentinel rows carry user_id < 0 and are filtered from the
-    output, so the answer equals the batch LEFT JOIN the oracle states.
-    At 100 TB the same trick closes out a backfilled day; in continuous
-    operation live traffic plays the role of the flush files.  State is
-    bounded by (watermark delay + join window) x arrival rate per
-    side."""
+    no matching click can ever arrive.  NULL-padded rows are produced by
+    STATE EVICTION, which runs in a batch AFTER the one that advanced the
+    watermark, so a bounded backfill whose watermark stays inside the data
+    would emit zero unmatched rows.  This op stages the production
+    'sentinel flush' pattern: one far-future sentinel file (a purchase and
+    a click, so both sides' watermarks move) beside the data file.  Both
+    land in batch 0, which emits every match; the watermark then passes
+    every real row, and availableNow runs one no-data batch in which
+    eviction emits the unmatched purchases.  Two micro-batches in all.
+    Sentinel rows carry user_id < 0 and are filtered from the output, so
+    the answer equals the batch LEFT JOIN the oracle states.  At 100 TB
+    the same trick closes out a backfilled day; in continuous operation
+    live traffic plays the role of the sentinel.  State is bounded by
+    (watermark delay + join window) x arrival rate per side."""
     import hashlib
-    import os
-    import shutil
-    import time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..io import _convert_nanos, scratch_dir, table_path
-    from .runner import run_to_memory
+    from ..io import _convert_nanos, table_path
 
     src = table_path(sf_dir, "events")
     key = hashlib.md5(src.encode()).hexdigest()[:10]
@@ -592,39 +587,27 @@ def s_join_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = scratch_dir(f"kcss_outer_join_{key}")
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d)
-    main = os.path.join(d, "events.parquet")
-    # copy, never hard-link: a link shares the inode, so the os.utime
-    # below would rewrite the read-only fixture's own mtime
-    shutil.copyfile(src, main)
+    shutil.copyfile(src, os.path.join(d, "events.parquet"))
 
-    # two sentinel files in the RAW fixture schema, far-future timestamps;
-    # one purchase + one click each so BOTH watermark branches advance
+    # the sentinel in the RAW fixture schema, ~2030 in ns
     raw = pq.read_schema(src)
-    t0 = 1_900_000_000_000_000_000  # ~2030 in ns
-    now = time.time()
-    for i in (1, 2):
-        rows = {
-            "event_id": [-(2 * i), -(2 * i + 1)],
-            "ts": [t0 + i * 10**12, t0 + i * 10**12],
-            "user_id": [-1, -1],
-            "event_type": ["purchase", "click"],
-            "value": [0.0, 0.0],
-            "props": ["{}", "{}"],
-        }
-        path = os.path.join(d, f"zz_flush_{i}.parquet")
-        pq.write_table(
-            pa.table({f.name: rows[f.name] for f in raw}, schema=raw), path
-        )
-        os.utime(path, (now + 10 * i, now + 10 * i))
-    os.utime(main, (now - 10, now - 10))
+    t0 = 1_900_000_000_000_000_000
+    rows = {
+        "event_id": [-2, -3],
+        "ts": [t0, t0],
+        "user_id": [-1, -1],
+        "event_type": ["purchase", "click"],
+        "value": [0.0, 0.0],
+        "props": ["{}", "{}"],
+    }
+    pq.write_table(
+        pa.table({f.name: rows[f.name] for f in raw}, schema=raw),
+        os.path.join(d, "sentinel.parquet"),
+    )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = spark.read.parquet(src).schema
-    sdf = _convert_nanos(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
+    sdf = _convert_nanos(spark.readStream.schema(raw_schema).parquet(d))
     purchases = (
         sdf.filter(F.col("event_type") == "purchase")
         .select(
@@ -651,38 +634,9 @@ def s_join_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "leftOuter",
     )
-    # Round 14 (VERDICT r13 item 5): pace state partitions to the staged
-    # volume before the query starts.  A watermarked stream-stream join
-    # instantiates FOUR state stores PER shuffle partition, each paying
-    # commit/snapshot overhead EVERY micro-batch regardless of row
-    # volume (tools/ab_stream_join.py, round 10: p50 4.52 s @32
-    # partitions -> 1.03 s @8 at ~12.5k rows/batch), so at this op's
-    # 3-batch backfill the session's core-count default is pure fixed
-    # cost.  Scale-adaptive, not a local[32] constant: ~64 MB of staged
-    # input per partition with the bench tier's floor of 8, clamped to
-    # the session default — at production volume the clamp keeps the
-    # session's own sizing and this is a no-op.  Results are unchanged
-    # (state partitioning never affects which rows a watermarked join
-    # emits); conf restored even on failure.
-    from ..io import fixture_bytes
-
-    parts_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(parts_key)
-    paced = max(
-        8,
-        min(
-            int(prev_parts),
-            -(-fixture_bytes(sf_dir, "events") // (64 << 20)),
-        ),
+    out = run_to_memory(
+        joined.select("purchase_id", "click_id", "user_id"), sf_dir, mode="append"
     )
-    spark.conf.set(parts_key, str(paced))
-    try:
-        out = run_to_memory(
-            joined.select("purchase_id", "click_id", "user_id"),
-            mode="append",
-        )
-    finally:
-        spark.conf.set(parts_key, prev_parts)
     return out.filter(F.col("user_id") >= 0)
 
 
@@ -722,7 +676,7 @@ def s_compact_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format(F.col("m.ts"), _TS_FMT).alias("last_ts"),
         )
     )
-    return run_to_memory(agg, mode="complete")
+    return run_to_memory(agg, sf_dir, mode="complete")
 
 
 @register(
@@ -780,7 +734,7 @@ def s_ohlc_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    return run_to_memory(agg, mode="complete")
+    return run_to_memory(agg, sf_dir, mode="complete")
 
 
 @register(
@@ -827,7 +781,7 @@ def s_window_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_users",
         )
     )
-    return run_to_memory(agg, mode="complete")
+    return run_to_memory(agg, sf_dir, mode="complete")
 
 
 STREAM_TOPK = 2
@@ -879,7 +833,7 @@ def s_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    counts = run_to_memory(agg, mode="complete")
+    counts = run_to_memory(agg, sf_dir, mode="complete")
     return (
         counts.withColumn(
             "rank",
@@ -954,7 +908,7 @@ def s_threshold_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the memory-sink table self-joins (counts vs its own baseline):
     # checkpoint the tiny batch result so the two sides are distinct
     # plan nodes (conflicting-references otherwise)
-    counts = run_to_memory(agg, mode="complete").localCheckpoint(
+    counts = run_to_memory(agg, sf_dir, mode="complete").localCheckpoint(
         eager=True
     )
     t = counts.groupBy("event_type").agg(
@@ -1064,7 +1018,7 @@ def s_bollinger_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("long").alias("n"),
         )
     )
-    counts = run_to_memory(agg, mode="complete").localCheckpoint(
+    counts = run_to_memory(agg, sf_dir, mode="complete").localCheckpoint(
         eager=True
     )
     win = (
@@ -1178,7 +1132,7 @@ def s_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("long").alias("n"),
         )
     )
-    counts = run_to_memory(agg, mode="complete")
+    counts = run_to_memory(agg, sf_dir, mode="complete")
     hourly = counts.groupBy("win_start").agg(
         F.sum(F.when(F.col("arm") == 0, F.col("n")).otherwise(0))
         .cast("long")

@@ -14,9 +14,12 @@ import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import _convert_nanos, table_path
+from ..io import _convert_nanos, fixture_bytes, table_path
 
 _counter = itertools.count()
+_PARTS_KEY = "spark.sql.shuffle.partitions"
+# staged input bytes per state partition (see run_to_memory)
+_STATE_PARTITION_BYTES = 64 << 20
 
 
 def _staged_events_dir(sf_dir: str) -> str:
@@ -74,22 +77,41 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def run_to_memory(
     sdf: DataFrame,
+    sf_dir: str,
     mode: str = "complete",
     timeout_s: float = 120.0,
 ) -> DataFrame:
     """Execute a streaming DataFrame with trigger(availableNow) into a
-    uniquely named memory sink; return the sink contents as a batch DF."""
+    uniquely named memory sink; return the sink contents as a batch DF.
+
+    State partitions are sized to the staged input: every stateful
+    operator instantiates its state stores once per shuffle partition,
+    and each store pays a commit every micro-batch whatever its row
+    count, so a bounded stream over a small file spends its time in
+    store commits when it inherits the session's core-count default.
+    The rule is clamp(ceil(input bytes / 64 MiB), 1, session value),
+    where the input is the events fixture every caller streams.  A
+    query copies the session conf when it starts, so the value is set
+    around start() only; partitioning never changes which rows a query
+    emits."""
+    spark = sdf.sparkSession
     name = f"stream_sink_{next(_counter)}"
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+    prev_parts = spark.conf.get(_PARTS_KEY)
+    paced = -(-fixture_bytes(sf_dir, "events") // _STATE_PARTITION_BYTES)
+    spark.conf.set(_PARTS_KEY, str(min(max(paced, 1), int(prev_parts))))
+    try:
+        q = (
+            sdf.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(_PARTS_KEY, prev_parts)
     try:
         q.awaitTermination(timeout_s)
     finally:
         if q.isActive:
             q.stop()
-    return sdf.sparkSession.table(name)
+    return spark.table(name)

@@ -43,3 +43,19 @@ def test_every_oracle_column_set_matches(spark):
         checked += 1
     assert checked > 100
     assert not mismatches, mismatches
+
+
+def test_ansi_mode_pinned_on_both_session_paths(spark):
+    """Overflow semantics do not depend on the Spark default: get_spark and
+    ensure_engine_conf both set spark.sql.ansi.enabled=true."""
+    from kafka_connect_sse_spark.session import ensure_engine_conf, get_spark
+
+    key = "spark.sql.ansi.enabled"
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    try:
+        spark.conf.set(key, "false")
+        assert get_spark(shuffle_partitions=parts).conf.get(key) == "true"
+        spark.conf.set(key, "false")
+        assert ensure_engine_conf(spark).conf.get(key) == "true"
+    finally:
+        spark.conf.set(key, "true")

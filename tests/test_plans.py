@@ -1228,3 +1228,22 @@ def test_connected_comp_iterations_reuse_checkpointed_edges(spark):
     plan = formatted_plan(queries()["q_graph_connected_comp"](spark, SF))
     assert "Scan parquet" not in plan, plan
     assert "Scan ExistingRDD" in plan, plan
+
+
+def test_scan_partitions_parses_byte_strings(spark):
+    """_scan_partitions reads the split confs with Spark's own suffix
+    rules ("128MB", "16k"), and matches the scan Spark actually plans for
+    every fixture table."""
+    from kafka_connect_sse_spark.io import TABLES, table_path
+    from kafka_connect_sse_spark.plans import _scan_partitions
+
+    key = "spark.sql.files.maxPartitionBytes"
+    try:
+        for value in ("128MB", "16k"):
+            spark.conf.set(key, value)
+            for t in TABLES:
+                # a fresh DataFrame each time: one caches its physical plan
+                df = spark.read.parquet(table_path(SF, t))
+                assert _scan_partitions(df) == df.rdd.getNumPartitions(), (t, value)
+    finally:
+        spark.conf.unset(key)

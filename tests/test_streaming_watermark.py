@@ -71,3 +71,58 @@ def test_watermark_evicts_old_window_state(spark):
     assert old == [5], out
     assert ("2024-01-02 10:00", 10) in out
     shutil.rmtree(base, ignore_errors=True)
+
+
+def test_outer_join_two_batches_at_paced_partitions(spark):
+    """s_join_stream_stream_outer runs one data batch (data file and
+    sentinel together) plus the no-data eviction batch, at no more state
+    partitions than the session default, and still equals its oracle."""
+    import duckdb
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from kafka_connect_sse_spark.registry import oracle_sql, queries
+    from tools.check_correctness import canon
+
+    sf_dir = "/root/testdata/sf0.001"
+    name = "s_join_stream_stream_outer"
+
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            self.events = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.events.append(event.progress)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        spdf = queries()[name](spark, sf_dir).toPandas()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+
+    con = duckdb.connect()
+    con.execute("SET TimeZone='UTC'")
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
+    opdf = con.execute(oracle_sql()[name]).df()
+    scols, _, shash = canon(spdf)
+    ocols, _, ohash = canon(opdf)
+    assert (scols, shash) == (ocols, ohash)
+    assert spdf["click_id"].isna().any(), "no row came from state eviction"
+
+    assert len({p.id for p in listener.events}) == 1
+    assert [p.batchId for p in listener.events] == [0, 1]
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parts = [s.numShufflePartitions for p in listener.events for s in p.stateOperators]
+    assert parts and max(parts) <= session_parts, parts
+    # 28 KB of staged events: the sizing rule gives one state partition
+    assert set(parts) == {1}, parts
