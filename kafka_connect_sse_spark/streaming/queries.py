@@ -563,51 +563,42 @@ def s_join_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     STATE EVICTION, which runs in a batch AFTER the one that advanced the
     watermark, so a bounded backfill whose watermark stays inside the data
     would emit zero unmatched rows.  This op stages the production
-    'sentinel flush' pattern: one far-future sentinel file (a purchase and
-    a click, so both sides' watermarks move) beside the data file.  Both
-    land in batch 0, which emits every match; the watermark then passes
-    every real row, and availableNow runs one no-data batch in which
-    eviction emits the unmatched purchases.  Two micro-batches in all.
+    'sentinel flush' pattern: a second file source holding one far-future
+    sentinel file (a purchase and a click, so both sides' watermarks move)
+    is unioned with the events stream.  Both sources land in batch 0,
+    which emits every match; the watermark then passes every real row,
+    and availableNow runs one no-data batch in which eviction emits the
+    unmatched purchases.  Two micro-batches in all.
     Sentinel rows carry user_id < 0 and are filtered from the output, so
     the answer equals the batch LEFT JOIN the oracle states.  At 100 TB
     the same trick closes out a backfilled day; in continuous operation
     live traffic plays the role of the sentinel.  State is bounded by
     (watermark delay + join window) x arrival rate per side."""
-    import hashlib
+    import datetime
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..io import _convert_nanos, table_path
-
-    src = table_path(sf_dir, "events")
-    key = hashlib.md5(src.encode()).hexdigest()[:10]
-    # sf-keyed AND pid-keyed (scratch_dir): two concurrent checkers at the
-    # SAME sf must not rmtree each other's live staging dir
-    d = scratch_dir(f"kcss_outer_join_{key}")
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d)
-    shutil.copyfile(src, os.path.join(d, "events.parquet"))
-
-    # the sentinel in the RAW fixture schema, ~2030 in ns
-    raw = pq.read_schema(src)
-    t0 = 1_900_000_000_000_000_000
-    rows = {
-        "event_id": [-2, -3],
-        "ts": [t0, t0],
-        "user_id": [-1, -1],
-        "event_type": ["purchase", "click"],
-        "value": [0.0, 0.0],
-        "props": ["{}", "{}"],
-    }
-    pq.write_table(
-        pa.table({f.name: rows[f.name] for f in raw}, schema=raw),
-        os.path.join(d, "sentinel.parquet"),
-    )
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(src).schema
-    sdf = _convert_nanos(spark.readStream.schema(raw_schema).parquet(d))
+    # the sentinel in the streamed schema (ts as UTC-adjusted micros, which
+    # Spark reads as TIMESTAMP), written once per process
+    d = scratch_dir("kcss_outer_join_sentinel")
+    path = os.path.join(d, "sentinel.parquet")
+    if not os.path.exists(path):
+        os.makedirs(d, exist_ok=True)
+        far = datetime.datetime(2100, 1, 1, tzinfo=datetime.timezone.utc)
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array([-2, -3], pa.int64()),
+                "ts": pa.array([far, far], pa.timestamp("us", tz="UTC")),
+                "user_id": pa.array([-1, -1], pa.int64()),
+                "event_type": ["purchase", "click"],
+                "value": [0.0, 0.0],
+                "props": ["{}", "{}"],
+            }),
+            path,
+        )
+    events = events_stream(spark, sf_dir)
+    sdf = events.unionByName(spark.readStream.schema(events.schema).parquet(d))
     purchases = (
         sdf.filter(F.col("event_type") == "purchase")
         .select(

@@ -19,7 +19,7 @@ from ..io import _convert_nanos, fixture_bytes, table_path
 _counter = itertools.count()
 _PARTS_KEY = "spark.sql.shuffle.partitions"
 # staged input bytes per state partition (see run_to_memory)
-_STATE_PARTITION_BYTES = 64 << 20
+_STATE_PARTITION_BYTES = 1 << 20
 
 
 def _staged_events_dir(sf_dir: str) -> str:
@@ -89,8 +89,10 @@ def run_to_memory(
     and each store pays a commit every micro-batch whatever its row
     count, so a bounded stream over a small file spends its time in
     store commits when it inherits the session's core-count default.
-    The rule is clamp(ceil(input bytes / 64 MiB), 1, session value),
-    where the input is the events fixture every caller streams.  A
+    The rule is clamp(ceil(input bytes / 1 MiB), 1, session value),
+    where the input is the events fixture every caller streams: one
+    partition per MiB is where the measured per-op times stop favouring
+    fewer partitions (SCALE.md, "Streaming state-partition sizing").  A
     query copies the session conf when it starts, so the value is set
     around start() only; partitioning never changes which rows a query
     emits."""
