@@ -497,6 +497,9 @@ def main() -> None:
         fn = qs[name]
         times = []
         for i in range(RUNS + WARMUPS):  # leading runs are warm-up
+            # a relation persisted by the previous run must not make
+            # this one look faster
+            spark.catalog.clearCache()
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             n = df.count()

@@ -130,8 +130,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def fixture_bytes(sf_dir: str, name: str) -> int:
     """On-disk size of a fixture table (file or directory of part
-    files) — the cheap cardinality proxy operators use to pick between
-    a rescan and a materialization (see q_retention_cohort)."""
+    files) — the cheap input-size proxy `streaming.runner` sizes state
+    partitions by."""
     p = table_path(sf_dir, name)
     if os.path.isfile(p):
         return os.path.getsize(p)

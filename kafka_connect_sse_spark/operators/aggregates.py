@@ -15,15 +15,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from ..io import fixture_bytes, load_table, register_views
+from ..io import load_table, register_views
 from ..registry import register
-
-# q_retention_cohort: checkpoint the shared distinct relation only when
-# the events input is big enough that a second scan costs more than the
-# checkpoint's measured ~0.4 s fixed overhead (rescan won at 15.8 MB/sf1
-# by 0.38 s — tools/ab_stage_reuse_results.json; linear extrapolation
-# puts the crossover near a few hundred MB)
-RETENTION_CHECKPOINT_MIN_BYTES = 256 << 20
 
 
 @register(
@@ -1083,20 +1076,16 @@ def q_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     |users|-sized first-day relation instead); the cohort rollup's
     shuffle is |cohort days| groups.  The (user, day) distinct relation
     feeds BOTH the first-day aggregate and the activity side of the
-    join, so without materialization the raw events scan runs twice
-    (AQE plans broadcast branches as separate stages — the named
-    no-cross-stage-reuse trap).  The localCheckpoint is CONDITIONAL on
-    input size (VERDICT r8 item 5): tools/ab_stage_reuse_results.json
-    measured the checkpoint as a fixed ~0.4 s overhead that LOSES to a
-    cheap pruned rescan at every tested tier (sf0.01: 0.392 vs 0.339 s;
-    sf1 / 15.8 MB: 1.336 vs 0.959 s), while the rescan's cost grows
-    linearly with input — so small inputs rescan, and inputs past
-    RETENTION_CHECKPOINT_MIN_BYTES (where one extra scan clearly
-    exceeds the measured fixed overhead) checkpoint."""
+    join, so the column-pruned events scan runs twice (AQE plans
+    broadcast branches as separate stages — the named
+    no-cross-stage-reuse trap).  The rescan is deliberate: a
+    localCheckpoint of the distinct relation measured as a fixed
+    ~0.4 s overhead that LOSES to the pruned rescan at every tested
+    tier (sf0.01: 0.392 vs 0.339 s; sf1 / 15.8 MB: 1.336 vs 0.959 s;
+    table in PLANS.md); no fixture up to sf10 (182 MB of events)
+    reaches a size where the checkpoint was shown to pay."""
     e = load_table(spark, sf_dir, "events")
     act = e.select("user_id", F.col("ts").cast("date").alias("d")).distinct()
-    if fixture_bytes(sf_dir, "events") >= RETENTION_CHECKPOINT_MIN_BYTES:
-        act = act.localCheckpoint(eager=True)
     first = act.groupBy("user_id").agg(F.min("d").alias("cohort_day"))
     j = act.join(first, "user_id")
     flags = j.groupBy("cohort_day", "user_id").agg(
@@ -1734,10 +1723,10 @@ def q_ts_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type, day) groups; min_by/max_by carry constant state per group
     (value + key), so map-side combine does almost all the work.
     Measured honestly against the first/last_value window-sort form
-    (tools/ab_ohlc.py, identical bars): at sf1 the window form is
-    timing-NEUTRAL (1.11 s vs 1.31 s — the fixture has only ~150 dense
-    groups, where a partition sort is cheap); the aggregate form is
-    kept because its state is O(groups) while the window form sorts
+    (tools/ab_ohlc_results.json, identical bars): at sf1 the window
+    form is timing-NEUTRAL (1.11 s vs 1.31 s — the fixture has only
+    ~150 dense groups, where a partition sort is cheap); the aggregate
+    form is kept because its state is O(groups) while the window form sorts
     and materializes EVERY row per partition — at 10⁹-row groups the
     sort is the memory-and-spill hazard, the combine is not."""
     e = load_table(spark, sf_dir, "events")

@@ -850,10 +850,10 @@ def x_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mechanics: distinct 3-token shingles per doc (same shingle unit as
     the minhash family), then the INVERTED-INDEX shape proper: ONE
     groupBy keyed on (16-byte md5 digest of the shingle, lang) builds
-    posting lists (round 14 — the shingle string never reaches the
-    exchange; see containment_dedup), single-doc
-    postings are dropped map-side, ordered pairs are expanded from each
-    posting list WITHOUT a second pass over the corpus, and the
+    posting lists (the shingle string never reaches the exchange; see
+    the digest comment below), single-doc postings are dropped
+    map-side, ordered pairs are expanded from each posting list
+    WITHOUT a second pass over the corpus, and the
     per-pair intersection counts aggregate on (inner, outer) doc-id
     pairs.  Runs over the FULL corpus — no bounded sample — because
     discriminative shingles keep posting lists short: total pair work
@@ -873,8 +873,8 @@ def x_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE's runtime size check.  Left unhinted, AQE broadcasts it whenever
     its measured size is under the threshold and falls back to a
     shuffled join when it isn't — the plan that survives 100 TB.  The
-    other 100 TB guard is the hot-postings cap (`max_df`, below):
-    dropping shingles whose document frequency exceeds a bound — the
+    other 100 TB guard is the hot-postings cap (below): dropping
+    shingles whose document frequency exceeds a bound — the
     same skew/memory guard on collect_list that x_dedup_near_minhash's
     MAX_BUCKET applies to LSH buckets.  Ubiquitous-boilerplate shingles
     (site chrome, license headers) are the quadratic posting lists, and
@@ -885,8 +885,7 @@ def x_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_weak_ops.py proves both properties on a synthetic
     boilerplate-heavy corpus).
 
-    Round 11 (VERDICT r10 item 2): the registered op NEVER runs
-    uncapped — max_df defaults to "auto", sized from the data by a
+    The op never runs uncapped.  The cap is sized from the data by a
     rule deterministic enough to mirror in the oracle SQL, so the gate
     stays EXACT while the cap is no hand-picked constant: an extra
     map-side pass computes the exact df of the 1/16 md5-prefix shingle
@@ -895,37 +894,18 @@ def x_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE cross-stage recompute of the main groupBy), p99 of that df
     profile is a rank statistic off its tiny histogram (self-join on
     |distinct df values| rows — no global window), and
-    cap = max({CONTAIN_DF_FLOOR}, {CONTAIN_DF_HEADROOM} x p99).
-    Boilerplate posting lists sit orders of magnitude above p99 and
-    are dropped; discriminative shingles (df <= dup-cluster size) sit
-    far below FLOOR and always count.  The round-10 sf10 probe
-    measured WHY uncapped is fatal: 6.9e9 candidate pairs / 48g OOM
-    on a corpus whose every shingle was hot, vs a binding cap
-    completing in 145 s.  Docs with fewer than
+    cap = max({CONTAIN_DF_FLOOR}, {CONTAIN_DF_HEADROOM} x p99), applied as one
+    size() predicate on the aggregated posting lists (no shuffle beyond
+    the sampled profile pass).  Boilerplate posting lists sit orders of
+    magnitude above p99 and are dropped; discriminative shingles
+    (df <= dup-cluster size) sit far below FLOOR and always count.  The
+    round-10 sf10 probe measured WHY uncapped is fatal: 6.9e9
+    candidate pairs / 48g OOM on a corpus whose every shingle was hot,
+    vs a binding cap completing in 145 s.  Docs with fewer than
     {CONTAIN_MIN_SHINGLES} shingles are excluded as inner side — too
     short to assert containment.  Both directions are emitted (full
     mutual containment = two rows), which is what a survivor policy
     downstream consumes (drop inner, keep outer)."""
-    return containment_dedup(spark, sf_dir)
-
-
-def containment_dedup(
-    spark: SparkSession,
-    sf_dir: str,
-    max_df: int | None | str = "auto",
-) -> DataFrame:
-    """Parameterized body of x_containment_dedup.
-
-    max_df: hot-postings cap — shingles appearing in more than max_df
-    documents (per lang) are dropped before pair expansion, bounding
-    every posting list at max_df and the pair work at Σ min(|p|,
-    max_df)².  "auto" (the registered default) sizes the cap from the
-    sampled-df p99 knee (see the @register docstring); an int pins it;
-    None disables it (measured-fatal at sf10 — test/ablation use only).
-    The drop happens on the aggregated posting list (one size()
-    predicate after the groupBy that already exists), so the cap adds
-    zero shuffles beyond the 1/16-sampled profile pass.
-    """
     from ..plans import spread
 
     # spread(): three map passes (postings explode, sampled df profile,
@@ -964,48 +944,40 @@ def containment_dedup(
         .agg(F.collect_list("doc_id").alias("ds"))
         .filter(F.size("ds") >= 2)
     )
-    if max_df == "auto":
-        # exact dfs of the deterministic 1/16 shingle sample; p99 as a
-        # rank statistic over the df HISTOGRAM (tiny: |distinct df
-        # values| rows), cumulated by self-join — no global window,
-        # no second pass over the full postings aggregation
-        prof = (
-            sh.filter(F.col("lang").isNotNull())
-            .filter(F.col("sh_hex").startswith(CONTAIN_PROFILE_PREFIX))
-            .select("lang", F.unhex("sh_hex").alias("sh_dig"))
-            .groupBy("sh_dig", "lang")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") >= 2)
-        )
-        hist = prof.groupBy("df").agg(F.count("*").alias("cnt"))
-        h2 = hist.select(
-            F.col("df").alias("df2"), F.col("cnt").alias("cnt2")
-        )
-        cum = (
-            hist.join(h2, F.col("df2") <= F.col("df"))
-            .groupBy("df")
-            .agg(F.sum("cnt2").alias("cum"))
-        )
-        tot = hist.agg(F.sum("cnt").alias("n_lists"))
-        p99 = (
-            cum.crossJoin(tot)
-            .filter(F.col("cum") >= F.expr("(99 * n_lists + 99) div 100"))
-            .agg(F.min("df").alias("p99_df"))
-        )
-        cap = p99.select(
-            F.greatest(
-                F.lit(CONTAIN_DF_FLOOR),
-                F.lit(CONTAIN_DF_HEADROOM)
-                * F.coalesce(F.col("p99_df"), F.lit(0)),
-            ).alias("cap_df")
-        )
-        # unhinted: cap is ONE row — AQE broadcasts it from its own size
-        # estimate, and this op's plan pin requires zero forced hints
-        postings = postings.crossJoin(cap).filter(
-            F.size("ds") <= F.col("cap_df")
-        )
-    elif max_df is not None:
-        postings = postings.filter(F.size("ds") <= max_df)
+    # exact dfs of the deterministic 1/16 shingle sample; p99 as a
+    # rank statistic over the df HISTOGRAM (tiny: |distinct df
+    # values| rows), cumulated by self-join — no global window,
+    # no second pass over the full postings aggregation
+    prof = (
+        sh.filter(F.col("lang").isNotNull())
+        .filter(F.col("sh_hex").startswith(CONTAIN_PROFILE_PREFIX))
+        .select("lang", F.unhex("sh_hex").alias("sh_dig"))
+        .groupBy("sh_dig", "lang")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") >= 2)
+    )
+    hist = prof.groupBy("df").agg(F.count("*").alias("cnt"))
+    h2 = hist.select(F.col("df").alias("df2"), F.col("cnt").alias("cnt2"))
+    cum = (
+        hist.join(h2, F.col("df2") <= F.col("df"))
+        .groupBy("df")
+        .agg(F.sum("cnt2").alias("cum"))
+    )
+    tot = hist.agg(F.sum("cnt").alias("n_lists"))
+    p99 = (
+        cum.crossJoin(tot)
+        .filter(F.col("cum") >= F.expr("(99 * n_lists + 99) div 100"))
+        .agg(F.min("df").alias("p99_df"))
+    )
+    cap = p99.select(
+        F.greatest(
+            F.lit(CONTAIN_DF_FLOOR),
+            F.lit(CONTAIN_DF_HEADROOM) * F.coalesce(F.col("p99_df"), F.lit(0)),
+        ).alias("cap_df")
+    )
+    # unhinted: cap is ONE row — AQE broadcasts it from its own size
+    # estimate, and this op's plan pin requires zero forced hints
+    postings = postings.crossJoin(cap).filter(F.size("ds") <= F.col("cap_df"))
     # packed single-long pair key through the near-unique-key count
     # (the co_catalog_postings rule, round 13): doc ids are positive
     # ints < 2^31, so shiftleft(inner,32)+outer is collision-free —
@@ -1406,10 +1378,10 @@ def x_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(h) with partial collect_set builds per-shingle SOURCE
     posting lists — bounded by |sources| (tens), never by corpus size,
     so there is no hot-postings problem (contrast x_containment_dedup,
-    whose doc-id posting lists need a max_df cap).  Ordered pairs expand
-    map-side from each sorted posting list (two Generates); pair counts
-    partial-aggregate on a key space bounded by |sources|²; per-source
-    vocabulary sizes come from re-exploding the posting relation
+    whose doc-id posting lists need a document-frequency cap).  Ordered
+    pairs expand map-side from each sorted posting list (two Generates);
+    pair counts partial-aggregate on a key space bounded by |sources|²;
+    per-source vocabulary sizes come from re-exploding the posting relation
     (|shingle vocab|-sized, NOT the corpus) and the final joins are
     |sources|-row broadcasts."""
     from ..plans import spread

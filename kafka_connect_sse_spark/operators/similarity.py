@@ -2,9 +2,9 @@
 
 Two paths with identical semantics on fixture data:
   * x_sim_topk_cosine — brute-force top-k cosine for a bounded query set:
-    O(|Q|·N) dot products, broadcast the queries, no N² blowup.  EXACT
-    (DuckDB list_dot_product oracle; scores rounded before ranking so FP
-    summation order can never flip a rank).
+    O(|Q|·N) dot products, queries shipped to every scan task, no N²
+    blowup.  EXACT (DuckDB list_dot_product oracle; scores rounded
+    before ranking so FP summation order can never flip a rank).
   * x_sim_lsh_bucketed — random-hyperplane LSH bucketing: each vector gets a
     sign-bit code from deterministic pseudo-random hyperplanes; candidates
     only within the same bucket.  This is the 100 TB path: the join key is
@@ -12,10 +12,11 @@ Two paths with identical semantics on fixture data:
     multi-probe.  EXACT: the planes are literal constants generated
     driver-side (hashlib md5), identical in the DuckDB oracle.
 
-Dot products run through `F.aggregate` over zipped arrays — JVM higher-order
-functions — at small scans; above SIM_ARROW_MIN_BYTES the brute-force ops
-hand Arrow batches to numpy instead (round 13, guide §4.2), accumulating in
-the identical sequential fold order so results stay bit-for-bit equal.
+Dot products run through `F.aggregate` over zipped arrays — JVM
+higher-order functions — except in the brute-force scans
+(x_sim_topk_cosine, x_ann_rerank), which hand Arrow batches to numpy and
+accumulate in the identical sequential fold order, so results stay
+bit-for-bit equal to the fold.
 """
 
 from __future__ import annotations
@@ -27,18 +28,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from ..io import fixture_bytes, load_table
+from ..io import load_table
 from ..registry import register
 
 N_QUERIES = 10  # bounded query set: vec_id < 10
 TOP_K = 5
 N_PLANES = 8  # LSH code width
 EMB_DIM = 64  # fixture embedding dimensionality (gen_fixture.py)
-# x_sim_topk_cosine path gate: below this input size the JVM fold beats
-# the Arrow round-trip (measured: sf0.1 0.46 s fold vs 0.61 s Arrow;
-# sf10 1.99 s fold vs 0.69 s Arrow) — at production scale the Arrow
-# path always wins and is always selected
-SIM_ARROW_MIN_BYTES = 4_000_000
 
 
 def _as_double(col):
@@ -98,10 +94,6 @@ def dot(a, b):
     )
 
 
-def cosine(a, b):
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-
 @register(
     "x_sim_topk_cosine",
     oracle=f"""
@@ -125,23 +117,19 @@ def x_sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k for a bounded query set (the correctness
     baseline; ship the queries to every scan task, scan candidates once).
 
-    Round 13 (guide §4.2): above SIM_ARROW_MIN_BYTES of input the
-    per-pair JVM higher-order fold — an interpreted lambda chain
-    allocating a zipped array per pair — is replaced by ONE mapInArrow
-    stage that hands each Arrow batch to numpy.  Exactness is preserved,
-    not approximated: dots and norms accumulate in the engine's
-    sequential fold order (see _fold_dots), so every cosine is
-    bit-identical to the old plan's, and the final round(6)+rank runs in
-    Spark exactly as before.  Each task emits only its provably-
-    sufficient candidates: rows within 2e-6 of its k-th best unrounded
-    cosine per query (rounding to 6dp is monotone with 1e-6 granularity,
-    so anything further behind can never enter the global rounded
-    top-k) — the ranking shuffle carries a few dozen rows per task
-    instead of |batch|×|Q|.  Measured: sf10 noop 1.99 s → 0.69 s; below
-    the gate the fold path stays (tiny scans pay more for the Python
-    worker round-trip than the fold costs: sf0.1 0.46 s vs 0.61 s) —
-    both paths emit bit-identical rows (oracle-green on each), and at
-    production scale the Arrow path is always the one selected.
+    One mapInArrow stage hands each Arrow batch to numpy instead of a
+    per-pair JVM higher-order fold (an interpreted lambda chain
+    allocating a zipped array per pair).  Exactness is preserved, not
+    approximated: dots and norms accumulate in the engine's sequential
+    fold order (see _fold_dots), so every cosine is bit-identical to the
+    fold's, and the final round(6)+rank runs in Spark.  Each batch
+    prunes against its own k-th best (the bound of Incremental Top-K
+    Similarity Search, PAPERS.md): it emits only rows within 2e-6 of
+    its k-th best unrounded cosine per query (rounding to 6dp is
+    monotone with 1e-6 granularity, so anything further behind can
+    never enter the global rounded top-k) — the ranking shuffle carries
+    a few dozen rows per batch instead of |batch|×|Q|.  Measured against
+    the fold: sf10 1.99 s → 0.69 s, level at sf0.1 (0.65 vs 0.66 s).
 
     The query matrix is N_QUERIES×64 doubles (~5 KB) collected on the
     driver — the bounded-literal precedent of q_join_bloom_prune's
@@ -151,34 +139,6 @@ def x_sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread(): parallelize the scoring off the single-split scan
     # (x_ann_rerank precedent; no-op at real scale)
     e = spread(load_table(spark, sf_dir, "embeddings"), "vec_id")
-    if fixture_bytes(sf_dir, "embeddings") < SIM_ARROW_MIN_BYTES:
-        q = e.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            _as_double(F.col("embedding")).alias("qv"),
-        ).withColumn("qnorm", F.sqrt(dot(F.col("qv"), F.col("qv"))))
-        c = e.select(
-            F.col("vec_id").alias("neighbor_id"),
-            _as_double(F.col("embedding")).alias("cv"),
-        ).withColumn("cnorm", F.sqrt(dot(F.col("cv"), F.col("cv"))))
-        scored_jvm = (
-            c.join(broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(
-                    dot(F.col("qv"), F.col("cv"))
-                    / (F.col("qnorm") * F.col("cnorm")),
-                    6,
-                ).alias("cos_sim"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos_sim").desc(), "neighbor_id"
-        )
-        return (
-            scored_jvm.select("*", F.row_number().over(w).alias("rnk"))
-            .filter(F.col("rnk") <= TOP_K)
-        )
     qrows = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < N_QUERIES)
@@ -843,83 +803,12 @@ def x_ann_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stored index instead of re-quantizing the full fp base inline,
     which PLANS.md's r6 attribution identified as the remaining O(N)
     floor of the inline form.  That is the production index lifecycle:
-    quantize once at ingest, amortize across every query; PLANS.md's
-    A/B (tools/ab_ann.py) measures the difference with the build
-    excluded."""
-    return ann_pipeline(spark, sf_dir, use_stored_index=True)
-
-
-_ANN_INDEX_BUILT: set[str] = set()
-_ANN_INDEX_LOCK = threading.Lock()
-
-
-def ann_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once storage of the IVF+int8 index: x_embed_quantize's
-    floor-based symmetric codes, narrowed to array<tinyint> (the actual
-    4× wire/storage compression — |q_i| <= 127 fits int8 exactly), plus
-    the coarse-cell assignment (`label`).  Keyed by corpus dir and
-    pid-keyed via scratch_dir so concurrent checker processes never
-    clobber each other; within a process every query after the first
-    reads the stored parquet.  At 100 TB this is a real table written by
-    the ingest pipeline — the point is that queries are O(index scan),
-    not O(re-quantize the fp64 base)."""
-    import os
-
-    from ..io import scratch_dir
-
-    # cache key = corpus dir + a freshness fingerprint of the source
-    # table (mtime_ns + size of every data file under
-    # embeddings.parquet) — a fixture regenerated within the same
-    # process must MISS, not silently serve the stale index
-    # (ADVICE r7 item 3)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    fp = hashlib.md5(sf_dir.encode())
-    if os.path.isdir(src):
-        for root, _dirs, files in sorted(os.walk(src)):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                fp.update(f"{f}:{st.st_mtime_ns}:{st.st_size};".encode())
-    elif os.path.exists(src):
-        st = os.stat(src)
-        fp.update(f"{st.st_mtime_ns}:{st.st_size}".encode())
-    key = fp.hexdigest()[:10]
-
-    d = scratch_dir(f"kcss_ann_index_{key}")
-    path = os.path.join(d, "ann_index.parquet")
-    with _ANN_INDEX_LOCK:
-        if path not in _ANN_INDEX_BUILT:
-            e = load_table(spark, sf_dir, "embeddings")
-            v = _as_double(F.col("embedding"))
-            scale = F.array_max(F.transform(v, lambda x: F.abs(x)))
-            q8 = F.when(
-                scale == 0, F.transform(v, lambda x: F.lit(0).cast("tinyint"))
-            ).otherwise(
-                F.transform(v, lambda x: F.floor(x / scale * 127).cast("tinyint"))
-            )
-            e.select("vec_id", "label", q8.alias("q")).write.mode(
-                "overwrite"
-            ).parquet(path)
-            _ANN_INDEX_BUILT.add(path)
-    return path
-
-
-def ann_pipeline(
-    spark: SparkSession, sf_dir: str, use_stored_index: bool = True
-) -> DataFrame:
-    """Parameterized body of x_ann_pipeline: use_stored_index=False keeps
-    the r6 inline-quantization form for the A/B (tools/ab_ann.py); both
-    forms produce identical rows (int8 codes are identical whether read
-    back from parquet or computed in the plan)."""
+    quantize once at ingest, amortize across every query.  Measured at
+    sf1 with the build excluded: 2.54 s inline → 0.69 s stored (table in
+    PLANS.md).  The oracle quantizes inline; the codes are the same
+    whether read back from parquet or computed in the plan."""
     e = load_table(spark, sf_dir, "embeddings")
-    if use_stored_index:
-        base = spark.read.parquet(ann_index_path(spark, sf_dir))
-    else:
-        v_inline = _as_double(F.col("embedding"))
-        scale = F.array_max(F.transform(v_inline, lambda x: F.abs(x)))
-        q8 = F.when(
-            scale == 0, F.transform(v_inline, lambda x: F.lit(0).cast("long"))
-        ).otherwise(F.transform(v_inline, lambda x: F.floor(x / scale * 127)))
-        base = e.select("vec_id", "label", q8.alias("q"))
+    base = spark.read.parquet(ann_index_path(spark, sf_dir))
     v = _as_double(F.col("embedding"))
     queries_q = base.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -976,6 +865,60 @@ def ann_pipeline(
     return exact.select("*", F.row_number().over(w2).alias("rnk")).filter(
         F.col("rnk") <= TOP_K
     )
+
+
+_ANN_INDEX_BUILT: set[str] = set()
+_ANN_INDEX_LOCK = threading.Lock()
+
+
+def ann_index_path(spark: SparkSession, sf_dir: str) -> str:
+    """Build-once storage of the IVF+int8 index: x_embed_quantize's
+    floor-based symmetric codes, narrowed to array<tinyint> (the actual
+    4× wire/storage compression — |q_i| <= 127 fits int8 exactly), plus
+    the coarse-cell assignment (`label`).  Keyed by corpus dir and
+    pid-keyed via scratch_dir so concurrent checker processes never
+    clobber each other; within a process every query after the first
+    reads the stored parquet.  At 100 TB this is a real table written by
+    the ingest pipeline — the point is that queries are O(index scan),
+    not O(re-quantize the fp64 base)."""
+    import os
+
+    from ..io import scratch_dir
+
+    # cache key = corpus dir + a freshness fingerprint of the source
+    # table (mtime_ns + size of every data file under
+    # embeddings.parquet) — a fixture regenerated within the same
+    # process must MISS, not silently serve the stale index
+    # (ADVICE r7 item 3)
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    fp = hashlib.md5(sf_dir.encode())
+    if os.path.isdir(src):
+        for root, _dirs, files in sorted(os.walk(src)):
+            for f in sorted(files):
+                st = os.stat(os.path.join(root, f))
+                fp.update(f"{f}:{st.st_mtime_ns}:{st.st_size};".encode())
+    elif os.path.exists(src):
+        st = os.stat(src)
+        fp.update(f"{st.st_mtime_ns}:{st.st_size}".encode())
+    key = fp.hexdigest()[:10]
+
+    d = scratch_dir(f"kcss_ann_index_{key}")
+    path = os.path.join(d, "ann_index.parquet")
+    with _ANN_INDEX_LOCK:
+        if path not in _ANN_INDEX_BUILT:
+            e = load_table(spark, sf_dir, "embeddings")
+            v = _as_double(F.col("embedding"))
+            scale = F.array_max(F.transform(v, lambda x: F.abs(x)))
+            q8 = F.when(
+                scale == 0, F.transform(v, lambda x: F.lit(0).cast("tinyint"))
+            ).otherwise(
+                F.transform(v, lambda x: F.floor(x / scale * 127).cast("tinyint"))
+            )
+            e.select("vec_id", "label", q8.alias("q")).write.mode(
+                "overwrite"
+            ).parquet(path)
+            _ANN_INDEX_BUILT.add(path)
+    return path
 
 
 @register(

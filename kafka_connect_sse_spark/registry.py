@@ -76,6 +76,7 @@ def register(name: str, oracle: str | None = None):
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
+        wrapped.__wrapped__ = fn  # inspect.unwrap() finds the op's module
         if name in QUERIES:
             raise ValueError(f"duplicate query id {name}")
         QUERIES[name] = wrapped
@@ -104,227 +105,6 @@ def register(name: str, oracle: str | None = None):
 # tests/test_window_rotation.py re-derives the expected window from the
 # record files independently and pins the 50-entry prefix, so omitting
 # a recordless op is a structural test failure, not a review item.
-# The hand-written compositions below stay as the r6–r12 audit trail.
-#
-# Round-12 window composition (50 entries):
-#   (a) the 38 ops with NO driver record yet (VERDICT r11 item 1 names
-#       them exhaustively — the round-11 continuation/session-3 batch
-#       that the r11 window's rotation debt displaced).  Four of them
-#       are ALSO code/oracle-modified this round and re-attest their
-#       current form here: q_agg_mutual_info (-0.0 collapse extended
-#       to h_type/h_dow on both engines, ADVICE r12/1),
-#       q_agg_bootstrap_ci (scalar assembly rebuilt as single-row
-#       aggregates so degenerate input yields one NULL row like the
-#       oracle, ADVICE r12/2), q_jaccard_neighbors and
-#       q_graph_assortativity (hot-part degree cap, VERDICT r11
-#       item 2).  q_ts_decompose_ma had a docstring-exponent fix only
-#       (ADVICE r12/3) but sits in the 38 regardless;
-#   (b) new ops this round lead per rotation policy and displace the
-#       deepest (d) rows one-for-one as they land.  The session-2
-#       batch (x_unimax_mixture, x_target_encoding, q_agg_friedman,
-#       q_ts_bollinger, x_ece_calibration, ...) landed after the
-#       window filled at 50 (38 debt rows are immovable per VERDICT
-#       r11 item 1) — they carry sf0.001+sf0.01 builder attestation
-#       plus the sf1 gate this round and LEAD the r13 window, exactly
-#       the r11 session-3 precedent;
-#   (c) —
-#   (d) top-up to 50 from the r6-era cohort (43 rows hold r6 as their
-#       newest record after the r11 rotation closed the r5 debt),
-#       alphabetical — the same rotation-start convention the r5 and
-#       r4 cohorts used.
-# Deferral evidence for everything outside the window: newest driver
-# record r6+ on code UNMODIFIED this round, plus the builder-side full
-# sf0.01 + sf1 sweeps run every round.
-#
-# Round-11 window composition (50 entries, final — the session-2
-# continuation added 17 more new ops and the simhash rewrite, so the
-# conservative seats yielded):
-#   (a) 6 of the 20 new ops — x_importance_resample_sampled (the DSIR
-#       scale twin, VERDICT r10 item 4), q_ts_theil_sen (robust
-#       trend), q_agg_trimmed_mean (exact trimmed/winsorized means),
-#       q_ts_mann_kendall (trend significance, the theil_sen pair),
-#       q_agg_mann_whitney (rank-sum test from the value histogram),
-#       x_sample_temperature (tau=2 mixture weights).  The other 14
-#       new ops (q_agg_cramers_v, q_win_median, x_dedup_fuzzy_edit,
-#       the rank-statistics batch q_agg_spearman / q_agg_kendall_tau /
-#       q_agg_hodges_lehmann / q_ts_changepoint, the chained-stateful
-#       streaming op s_window_distinct_users, the corpus-quality
-#       batch x_gopher_rules / x_ccnet_buckets / q_agg_benford, and
-#       the final trio q_ts_sma_crossover / q_agg_iqr_outliers /
-#       x_span_corruption_plan) carry the in-suite DRIVER-STYLE
-#       oracle gate this round
-#       (tests/test_operators.py::
-#       test_round11_unseated_new_ops_pass_driver_style_oracle_gate —
-#       the established r8/r9 deferral mechanism) and LEAD the r12
-#       window;
-#   (b) the 6 ops whose CODE or ORACLE changed this round and must
-#       re-attest: the three ADVICE r10 degenerate-division guards
-#       (q_agg_skew_kurt, q_agg_corr_matrix, x_embed_dim_stats),
-#       x_containment_dedup (auto-knee hot-postings cap, VERDICT r10
-#       item 2 — oracle rewritten to mirror the cap rule),
-#       x_contam_estimate (error contract restated union-relative +
-#       lgNomEntries=16 after the Zipf fixture exposed the old
-#       within-5%-of-intersection claim — caught by THIS round's sf1
-#       gate, fixed, re-attested at sf0.001/sf0.01/sf1), and
-#       x_dedup_simhash (bit-parallel vote rewrite, 3.2x at sf1 —
-#       output parity-pinned against the filter-form spec in tests,
-#       re-attested at sf0.001/sf0.01/sf1).  x_decontaminate
-#       (docstring-contract fix only) yielded its conservative seat:
-#       its r10 driver record attests the running code;
-#   (c) the FULL 38-op r5-era cohort VERDICT r10 item 1 names — after
-#       this round no operator's newest driver record predates round 6.
-#       The 3 oldest r6-era rows (q_agg_approx_distinct ..
-#       q_agg_collect_sorted) seated early in the round yielded to the
-#       new ops; their r6 records still satisfy the invariant and the
-#       r6 cohort rotation starts in r12.
-# Deferral evidence: every op leaving the window is code-UNMODIFIED
-# this round, so its newest driver record attests exactly the running
-# code, plus the builder-side full sf0.01 + sf1 sweeps each round.
-#
-# Round-10 window composition (kept for the audit trail, 50 entries):
-#   (a) the 12 new ops — the q_agg_mad sketch twin (VERDICT r9 item 7),
-#       the time-series recurrence pair (q_ts_holt, q_ts_cusum — exact
-#       integer fold state), q_ts_seasonal_dow, the higher-moment stats
-#       pair (q_agg_skew_kurt, q_agg_corr_matrix), the journey pair
-#       (q_markov_transitions, q_funnel_ttc), and the corpus/embedding
-#       profilers (x_tok_len_hist, x_doc_len_gini, x_char_ngram_entropy,
-#       x_embed_dim_stats);
-#   (b) the 6 ops whose CODE or ORACLE changed this round and must
-#       re-attest: the four ADVICE r9 exactness fixes (x_token_budget
-#       integral div, x_heaps_law degenerate-source guard,
-#       q_pagerank_iter PR_DAMP-interpolated oracle, q_fn_editdist
-#       integer-division oracle) plus q_agg_mad (docstring-contract
-#       update naming the sketch twin — included conservatively, the
-#       round-9 precedent), plus x_decontaminate (post-gate gram-build
-#       rewrite, 1.6x at sf10 — seated here and individually
-#       re-attested at sf0.01 + sf1; q_agg_rollup yields its (d) slot,
-#       its r5 record still satisfying the no-older-than-r5 invariant);
-#   (c) the FULL 26-op r4-era cohort VERDICT r9 item 1 names — the
-#       last rows whose newest driver record predates round 5; after
-#       this round every operator's newest record is r5+;
-#   (d) 6 of the oldest r5-era rows, alphabetical from that cohort's
-#       aggregates (q_agg_count_distinct .. q_agg_pivot), starting the
-#       r5 rotation the same way the r4 cohort rotated.
-# Deferral evidence: every op leaving the window is code-UNMODIFIED
-# this round, so its r8/r9 driver record attests exactly the running
-# code, plus the builder-side full sf0.01 + sf1 sweeps each round.
-#
-# Round-9 window composition (kept for the audit trail):
-#   (a) the 26 new ops — the third batch (q_agg_topn_share,
-#       q_win_streaks gaps-and-islands, q_fn_editdist,
-#       x_dup_cross_lang, x_length_outliers, x_token_budget), the
-#       second batch (q_pagerank_iter, s_ohlc_tumbling, q_ts_ewma,
-#       q_agg_hhi, x_langid_confusion, x_label_separation), the two
-#       sketch-quantile scale twins (q_rfm_segments_approx /
-#       x_embed_outliers_approx, VERDICT r8 item 3) and the 12-op
-#       analytics/corpus batch;
-#   (b) the 10 ops whose CODE or ORACLE changed this round and must
-#       re-attest: q_triangle_count (scale-safe degree-order
-#       orientation + vertex sample), u_grouped_map (bounded-input
-#       sample), q_retention_cohort (size-conditional checkpoint),
-#       q_fn_interval / u_pandas_grouped_agg / q_agg_mad (ADVICE r8
-#       exactness fixes), x_embed_outliers / x_embed_pca_power
-#       (shared-helper refactors), x_dup_graph_degree / q_rfm_segments
-#       (docstring-contract updates — included conservatively);
-#   (c) the 5 standing deferrals VERDICT r8 item 1 names, whose last
-#       driver rows are r4-era: x_interleave_sources, x_embed_quantize,
-#       u_arrow_map, x_ann_rerank, q_ts_downsample;
-#   (d) 9 more of the r4-era cohort in the round-8 rotation order
-#       (multimodal decode family, snk_avro, s_checkpoint_resume,
-#       x_sample_reservoir, x_data_card).
-# The 26 r4-era rows deferred each hold independent current-code
-# evidence: 17 sit in the in-suite DRIVER-STYLE oracle gate
-# (tests/test_operators.py::test_newly_deferred_r4_rows_pass_driver_style_oracle_gate
-# — q_fn_variant, q_fn_try_arithmetic, q_agg_hll/kll_mergeable,
-# q_agg_theta_overlap, q_agg_bitmap_distinct, q_agg_listagg,
-# q_cdc_scd2, q_agg_filtered, q_agg_global, q_fn_datetime2,
-# q_fn_string3, q_project_rename, q_set_intersect_all, q_agg_groupby,
-# q_fn_xml, q_fn_url); q_join_asof_nearest / src_parquet_scan /
-# q_join_bloom_prune / q_join_dpp / q_win_count_distinct carry
-# dedicated plan pins in tests/test_plans.py; snk_jsonl a parse
-# round-trip and snk_parquet_sorted a file-layout test; x_dedup_prefix
-# / x_hard_negatives planted-corpus tests in tests/test_round8_ops.py
-# — plus the builder-side full sf0.01 + sf1 sweeps this round.
-#
-# Round-8 window composition (kept for the audit trail): every
-# operator whose CODE or PLAN changed that round led — the 34 new ops
-# (q_triangle_count / s_compact_latest / x_cluster_purity — graph
-# analytics, streaming log compaction, clustering evaluation — then
-# q_agg_mad / q_fn_interval / x_embed_pca_power — robust stats,
-# calendar arithmetic, power-iteration PCA — then q_funnel_stages /
-# q_retention_cohort / q_attribution_last_touch /
-# q_anomaly_zscore_daily / q_pareto_abc / q_rfm_segments —
-# the product-analytics tier — plus x_vocab_coverage /
-# x_source_novelty / x_tokenizer_fertility /
-# u_pandas_grouped_agg / x_embed_outliers from the fourth round-8
-# continuation, x_quality_classifier / x_importance_resample /
-# x_pack_efficiency / x_dedup_semantic / x_dup_graph_degree from the
-# third round-8 continuation, x_bm25_score / x_source_overlap / x_split_leakage_safe /
-# x_domain_mix / x_curriculum_order from the
-# second round-8 continuation, then x_ks_drift / x_chi2_keyness /
-# x_zipf_fit / x_cooccur_pmi / x_cms_heavy_hitters from the first
-# continuation, then x_dedup_span /
-# x_perplexity_filter), x_ann_pipeline (ann_index_path cache-key
-# freshness, ADVICE r7 item 3), and the 8 ops rewritten in the round-8
-# evaluation-cost sweep (sorted run-length folds for x_word_entropy /
-# x_repetition_score; the zip_with shingles() rebuild flowing into
-# every shingle consumer: x_decontaminate, x_dedup_near_minhash,
-# x_ngram_jaccard, x_containment_dedup, x_dedup_incremental,
-# x_contam_estimate; outputs bit-identical, but their pre-r8 driver
-# records attest pre-rewrite plans, so they re-attest here) —
-# x_seq_tensorize (md5-bound-once tokenizer rewrite, continuation) is
-# ALSO code-modified and holds its window seat in the r4 tail.  Then
-# the 3 r3 rows round 7 deferred (standing contract), then 4 of the
-# 46-op r4 cohort (x_word_entropy and x_contam_estimate are cohort
-# members already seated in the head).  The 40 deferred r4 rows are
-# code-UNMODIFIED this round — their r4 driver records still attest
-# exactly the code that runs — and carry the strongest independent
-# current-code evidence (multimodal decode family: exact-integer
-# decoder tests in tests/test_multimodal_decoders.py; snk_avro:
-# tests/test_avro_ocf.py; s_checkpoint_resume:
-# tests/test_checkpoint_crash.py; x_sample_reservoir:
-# tests/test_pipeline_ops.py + plan pin; x_interleave_sources /
-# u_arrow_map / x_ann_rerank / q_ts_downsample: plan pins in
-# tests/test_plans.py; x_embed_quantize: tests/test_pipeline_ops.py +
-# plan pin; x_data_card / x_dedup_prefix / x_hard_negatives:
-# planted-corpus behavioral tests in tests/test_round8_ops.py;
-# q_join_bloom_prune / q_join_dpp: dedicated plan-shape tests in
-# tests/test_plans.py — all five deferred when the second
-# continuation's 5 new ops took their seats; snk_parquet_sorted:
-# behavioral file-layout test in tests/test_pipeline_ops.py;
-# q_win_count_distinct / q_join_asof_nearest: plan pins in
-# tests/test_plans.py; snk_jsonl: JSON-lines parse round-trip in
-# tests/test_operators.py; src_parquet_scan: column-pruning plan pin
-# in tests/test_plans.py — five deferred when the third
-# continuation's 5 new ops took their seats; q_agg_groupby /
-# q_fn_xml / q_fn_url / q_fn_variant / q_fn_try_arithmetic: an
-# in-suite DRIVER-STYLE oracle gate (canon hash compare,
-# tests/test_operators.py::test_newly_deferred_r4_rows_pass_driver_style_oracle_gate)
-# — five more deferred when the fourth continuation's 5 new ops took
-# their seats; q_agg_hll_mergeable / q_agg_kll_mergeable /
-# q_agg_theta_overlap: the same in-suite driver-style oracle gate,
-# extended — three more deferred when the analytics tier took its
-# seats; q_agg_bitmap_distinct / q_agg_listagg / q_cdc_scd2: the same
-# gate again when the anomaly/ABC/RFM trio landed; q_agg_filtered /
-# q_agg_global / q_fn_datetime2: the gate once more for the
-# MAD/interval/PCA trio; q_fn_string3 / q_project_rename /
-# q_set_intersect_all: the gate once more for the graph/streaming/
-# purity trio), all
-# green in this round's builder-side full sf0.01 + sf1 sweeps; they
-# LEAD ROUND 9's window ahead of the r5 cohort:
-#   x_multimodal_decode, x_multimodal_audio_decode,
-#   x_multimodal_video_sample, x_multimodal_framesample,
-#   x_multimodal_resize, snk_avro, s_checkpoint_resume,
-#   x_sample_reservoir, x_interleave_sources, x_embed_quantize,
-#   u_arrow_map, x_ann_rerank, q_ts_downsample, x_data_card,
-#   x_dedup_prefix, x_hard_negatives, q_join_bloom_prune, q_join_dpp,
-#   snk_parquet_sorted, q_win_count_distinct, q_join_asof_nearest,
-#   snk_jsonl, src_parquet_scan, q_agg_groupby, q_fn_xml, q_fn_url,
-#   q_fn_variant, q_fn_try_arithmetic, q_agg_hll_mergeable,
-#   q_agg_kll_mergeable, q_agg_theta_overlap, q_agg_bitmap_distinct,
-#   q_agg_listagg, q_cdc_scd2, q_agg_filtered, q_agg_global,
-#   q_fn_datetime2, q_fn_string3, q_project_rename,
-#   q_set_intersect_all
 WINDOW_SIZE = 50
 
 
@@ -370,71 +150,6 @@ def window_order(ops) -> list[str]:
     oldest-driver-record-first; alphabetical within each group."""
     newest = driver_record_rounds()
     return sorted(ops, key=lambda op: (newest.get(op, -1), op))
-
-
-# r12 audit trail — the last hand-built window (kept verbatim so the
-# r6–r12 composition comments above stay checkable):
-_R12_PRIORITY = (
-    # (a) the 38 driver-recordless round-11 ops (VERDICT r11 item 1);
-    # mutual_info / bootstrap_ci / the graph pair also re-attest their
-    # round-12 code changes from inside this block
-    "q_agg_anova_oneway",
-    "q_agg_benford",
-    "q_agg_bootstrap_ci",
-    "q_agg_cohens_d",
-    "q_agg_cramers_v",
-    "q_agg_gini",
-    "q_agg_hodges_lehmann",
-    "q_agg_iqr_outliers",
-    "q_agg_kendall_tau",
-    "q_agg_levene",
-    "q_agg_mutual_info",
-    "q_agg_pairwise_diffs",
-    "q_agg_psi",
-    "q_agg_spearman",
-    "q_agg_wilcoxon_signed",
-    "q_graph_assortativity",
-    "q_jaccard_neighbors",
-    "q_join_asof_tolerance",
-    "q_join_interval_overlap",
-    "q_snapshot_diff",
-    "q_ts_acf_multi",
-    "q_ts_changepoint",
-    "q_ts_decompose_ma",
-    "q_ts_holt_winters",
-    "q_ts_sma_crossover",
-    "q_win_median",
-    "s_threshold_alert",
-    "s_topk_per_window",
-    "s_window_distinct_users",
-    "x_ccnet_buckets",
-    "x_data_contract",
-    "x_dedup_fuzzy_edit",
-    "x_gopher_rules",
-    "x_kmeans_lloyd",
-    "x_multimodal_phash",
-    "x_shard_manifest",
-    "x_span_corruption_plan",
-    "x_ttr_segments",
-    # (b) new this round — first driver attestation (each displaces
-    # the deepest (d) row as it lands)
-    "q_agg_gini_approx",
-    "q_agg_kruskal_wallis",
-    "q_agg_survival_km",
-    "q_ts_lead_lag",
-    "x_dp_count_release",
-    "x_code_detect",
-    "snk_manifest_commit",
-    "x_decontaminate_semantic",
-    "q_agg_jarque_bera",
-    "q_agg_log_rank",
-    "q_agg_rate_wilson_ci",
-    "q_ts_seasonal_strength",
-    # (d) — displaced entirely by the 12 new ops; the r6 cohort
-    # rotation moves to r13 (all 43 rows hold their r6 records on
-    # code unmodified this round, plus this round's full sf0.01 +
-    # sf1 sweeps)
-)
 
 
 def _ordered(d: dict) -> dict:

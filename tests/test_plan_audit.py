@@ -98,3 +98,32 @@ def test_scale_toc_is_fresh():
         + r.stdout
         + r.stderr
     )
+
+
+@pytest.mark.parametrize("module_ts, flagged", [(200, True), (50, False)])
+def test_dump_older_than_its_module_is_flagged(tmp_path, monkeypatch,
+                                               module_ts, flagged):
+    """The freshness gate resolves each op to the module that defines it
+    (through the register() wrapper) and flags an after-dump committed
+    before that module's last commit.  Every other file, registry.py
+    included, reads as older than the dump, so the gate can only fire
+    by finding operators/dedup.py."""
+    rd = tmp_path / "r14"
+    rd.mkdir()
+    (rd / "x_containment_dedup_after.txt").write_text("plan\n")
+
+    def commit_ts(path):
+        if path.endswith("_after.txt"):
+            return 100
+        if path.endswith(os.path.join("operators", "dedup.py")):
+            return module_ts
+        return 10
+
+    monkeypatch.setattr(plan_audit, "_git_commit_ts", commit_ts)
+    stale = plan_audit.dump_freshness_violations(str(tmp_path))
+    if flagged:
+        assert len(stale) == 1, stale
+        assert "x_containment_dedup_after.txt" in stale[0]
+        assert "operators/dedup.py" in stale[0]
+    else:
+        assert stale == []

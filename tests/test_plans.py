@@ -815,21 +815,14 @@ def test_triangle_count_joins_checkpointed_edges(spark):
     assert "Window" not in plan, plan
 
 
-def test_retention_cohort_checkpoint_is_size_conditional(spark, monkeypatch):
-    """q_retention_cohort (VERDICT r8 item 5): the shared-distinct
-    localCheckpoint is conditional on input size.  Below the threshold
-    the plan rescans parquet (the measured winner at every tested
-    tier); with the threshold forced to 0 the plan reads the
-    checkpointed RDD and the parquet scan disappears."""
-    from kafka_connect_sse_spark.operators import aggregates as agg
-
-    q = queries()["q_retention_cohort"]
-    small = _final_plan(q(spark, SF))
-    assert "FileScan parquet" in small, small
-    monkeypatch.setattr(agg, "RETENTION_CHECKPOINT_MIN_BYTES", 0)
-    big = _final_plan(q(spark, SF))
-    assert "Scan ExistingRDD" in big, big
-    assert "FileScan parquet" not in big, big
+def test_retention_cohort_rescans_parquet(spark):
+    """q_retention_cohort has one form: the shared (user, day) distinct
+    relation is recomputed from a column-pruned parquet scan, never
+    checkpointed (the checkpoint lost to the rescan at every measured
+    tier)."""
+    plan = _final_plan(queries()["q_retention_cohort"](spark, SF))
+    assert "FileScan parquet" in plan, plan
+    assert "Scan ExistingRDD" not in plan, plan
 
 
 def test_rfm_segments_approx_is_sketch_only(spark):

@@ -1,6 +1,8 @@
 """Self-validation for WEAK-checked operators: the driver only counts their
 rows, so these tests pin the semantics the oracle can't."""
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -14,7 +16,8 @@ SF = "/root/testdata/sf0.001"
 def test_lsh_topk_scores_match_exact_brute_force(spark):
     """Every (query, neighbor) the LSH path returns must carry exactly the
     cosine the brute-force path computes — LSH may miss neighbors (recall),
-    never mis-score them."""
+    never mis-score them.  The brute-force op's numpy scan must match the
+    JVM sequential fold (`dot`) bit for bit."""
     qs = queries()
     exact = {
         (r.query_id, r.neighbor_id): r.cos_sim
@@ -49,6 +52,7 @@ def test_lsh_topk_scores_match_exact_brute_force(spark):
         )
         .collect()
     }
+    assert all(full[k] == v for k, v in exact.items())
     lsh = qs["x_sim_topk_lsh"](spark, SF).collect()
     assert len(lsh) > 0
     for r in lsh:
@@ -135,100 +139,116 @@ def test_multiprobe_recall_dominates_single_probe(spark):
     assert len(multi) >= len(single)
 
 
-def test_containment_hot_postings_cap_bounds_lists_keeps_recall(spark):
-    """The executable hot-postings cap (containment_dedup(max_df=...),
-    VERDICT r6 item 4): on a boilerplate-heavy corpus the cap must (a)
-    bound every posting list at max_df — the Σ|postings|² pair-work /
-    collect_list memory guard — while (b) recall on genuinely contained
-    pairs stays 1.0, because ubiquitous shingles carry no containment
-    signal: the pairs that cross CONTAIN_THR do so on discriminative
-    shingles, whose document frequency is low by definition."""
-    import os
+def _duck(sf_dir, table):
+    import duckdb
 
-    from kafka_connect_sse_spark.io import scratch_dir
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    if os.path.isdir(path):  # a Spark-written table is a directory
+        path = os.path.join(path, "*.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{path}'")
+    return con
+
+
+def _assert_matches_oracle(spark, name, sf_dir, table):
+    from tools.check_correctness import canon
+
+    from kafka_connect_sse_spark.registry import oracle_sql
+
+    spdf = queries()[name](spark, sf_dir).toPandas()
+    opdf = _duck(sf_dir, table).execute(oracle_sql()[name]).df()
+    scols, srows, shash = canon(spdf)
+    ocols, orows, ohash = canon(opdf)
+    assert scols == ocols, (scols, ocols)
+    assert shash == ohash, (srows[:4], orows[:4])
+    return spdf
+
+
+def test_containment_hot_postings_cap_bounds_lists_keeps_recall(
+    spark, tmp_path
+):
+    """The auto-sized hot-postings cap on a corpus where it binds: 80
+    docs share a boilerplate header (shingle df 81 > CONTAIN_DF_FLOOR)
+    while the sampled df profile is all df-2 passages (p99 2), so the
+    cap is the floor and every boilerplate posting list is dropped.
+    Spark must equal the oracle SQL's mirrored rule, the boilerplate
+    pairs (containment 10/12 uncapped) must be gone, and the planted
+    contained pair — carried by discriminative shingles — must
+    survive with its values untouched."""
+    import hashlib
+    from collections import Counter
+
     from kafka_connect_sse_spark.operators.dedup import (
-        containment_dedup,
-        shingle_array,
+        CONTAIN_DF_FLOOR,
+        CONTAIN_DF_HEADROOM,
+        CONTAIN_MIN_SHINGLES,
+        CONTAIN_PROFILE_PREFIX,
+        CONTAIN_THR,
     )
 
-    boiler = [f"boiler{i}" for i in range(60)]
+    boiler = [f"boiler{i}" for i in range(12)]
     core = [f"core{i}" for i in range(40)]
-    docs = [
-        # 30 docs sharing a 60-token boilerplate header -> hot shingles
-        # with document frequency 30
-        (i, "en", "synth", " ".join(boiler + [f"u{i}_{j}" for j in range(30)]))
-        for i in range(30)
-    ] + [
-        # planted contained pair, boilerplate-free on the inner side
-        (100, "en", "synth", " ".join(core)),
-        (101, "en", "synth",
-         " ".join([f"pre{j}" for j in range(20)] + core
-                  + [f"post{j}" for j in range(20)])),
-    ]
-    sf_dir = scratch_dir("kcss_containment_cap")
-    os.makedirs(sf_dir, exist_ok=True)
+    texts = {i: boiler + [f"u{i}_0", f"u{i}_1"] for i in range(80)}
+    for k in range(150):  # pairs sharing a 20-token passage (df 2)
+        passage = [f"p{k}_{j}" for j in range(20)]
+        texts[200 + 2 * k] = passage + [f"a{k}_{j}" for j in range(20)]
+        texts[201 + 2 * k] = [f"b{k}_{j}" for j in range(20)] + passage
+    # planted contained pair: a boilerplate-free inner doc quoted whole
+    # inside a boilerplate-headed outer doc
+    texts[1000] = core
+    texts[1001] = (
+        boiler + [f"pre{j}" for j in range(20)] + core
+        + [f"post{j}" for j in range(20)]
+    )
+
+    # the knee rule in plain Python: it must bind on this corpus
+    sh = {d: {" ".join(t[i:i + 3]) for i in range(len(t) - 2)}
+          for d, t in texts.items()}
+    df = Counter(g for s in sh.values() for g in s)
+    prof = sorted(
+        v for g, v in df.items()
+        if v >= 2
+        and hashlib.md5(g.encode()).hexdigest().startswith(
+            CONTAIN_PROFILE_PREFIX
+        )
+    )
+    p99 = prof[(99 * len(prof) + 99) // 100 - 1]
+    cap = max(CONTAIN_DF_FLOOR, CONTAIN_DF_HEADROOM * p99)
+    assert cap == CONTAIN_DF_FLOOR and max(df.values()) > cap
+
+    # uncapped, any two boilerplate docs would be a contained pair
+    assert len(sh[0] & sh[1]) / len(sh[0]) >= CONTAIN_THR
+    assert len(sh[0]) >= CONTAIN_MIN_SHINGLES
+
+    sf_dir = str(tmp_path)
     spark.createDataFrame(
-        docs, "doc_id long, lang string, source string, text string"
+        [(d, "en", "synth", " ".join(t)) for d, t in texts.items()],
+        "doc_id long, lang string, source string, text string",
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(sf_dir, "documents.parquet")
     )
-
-    cap = 5
-    # (a) the cap bounds posting-list size: uncapped, the boilerplate
-    # shingles hold 30-doc postings; capped, nothing exceeds max_df
-    d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    postings = (
-        d.select("doc_id", "lang",
-                 F.explode(shingle_array(F.col("text"))).alias("shingle"))
-        .groupBy("shingle", "lang")
-        .agg(F.count("*").alias("df"))
+    got = _assert_matches_oracle(
+        spark, "x_containment_dedup", sf_dir, "documents"
     )
-    assert postings.agg(F.max("df")).collect()[0][0] == 30
-    capped_max = (
-        postings.filter(F.col("df") <= cap).agg(F.max("df")).collect()[0][0]
-    )
-    assert capped_max <= cap
-
-    uncapped = {
-        (r.inner_id, r.outer_id): r for r in containment_dedup(spark, sf_dir).collect()
-    }
-    capped = {
-        (r.inner_id, r.outer_id): r
-        for r in containment_dedup(spark, sf_dir, max_df=cap).collect()
-    }
-    # (b) recall 1.0 on the planted contained pair, values untouched
-    # (none of the inner doc's shingles are hot)
-    assert (100, 101) in uncapped and (100, 101) in capped
-    assert capped[(100, 101)].containment == 1.0
-    assert capped[(100, 101)].n_common == uncapped[(100, 101)].n_common
-    # the cap only ever removes shingle evidence -> no new pairs appear
-    assert set(capped) <= set(uncapped)
-    # boilerplate 50%-overlap pairs never cross the 0.8 threshold
-    assert set(uncapped) == {(100, 101)}
+    rows = {(r.inner_id, r.outer_id): r for r in got.itertuples()}
+    assert set(rows) == {(1000, 1001)}
+    assert rows[(1000, 1001)].containment == 1.0
+    assert rows[(1000, 1001)].n_common == len(sh[1000])
 
 
-def test_ann_stored_index_matches_inline_and_is_int8(spark):
-    """The materialized ANN index (round 7) must change WHERE the int8
+def test_ann_stored_index_matches_oracle_and_is_int8(spark):
+    """The materialized ANN index (round 7) changes WHERE the int8
     codes come from, never WHAT they are: the stored parquet carries
     array<tinyint> codes (the real 4x storage compression), and the
-    stored-index pipeline returns row-identical results to the r6
-    inline-quantization form."""
-    from kafka_connect_sse_spark.operators.similarity import (
-        ann_index_path,
-        ann_pipeline,
-    )
+    pipeline reading it returns exactly the rows of the op's DuckDB
+    oracle, which quantizes inline."""
+    from kafka_connect_sse_spark.operators.similarity import ann_index_path
 
     idx = spark.read.parquet(ann_index_path(spark, SF))
     assert dict(idx.dtypes)["q"] == "array<tinyint>"
     assert idx.count() == spark.read.parquet(SF + "/embeddings.parquet").count()
-    stored = {
-        tuple(r) for r in ann_pipeline(spark, SF, use_stored_index=True).collect()
-    }
-    inline = {
-        tuple(r) for r in ann_pipeline(spark, SF, use_stored_index=False).collect()
-    }
-    assert stored == inline
-    assert len(stored) > 0
+    got = _assert_matches_oracle(spark, "x_ann_pipeline", SF, "embeddings")
+    assert len(got) > 0
 
 
 def test_ann_index_cache_misses_on_regenerated_fixture(spark, tmp_path):

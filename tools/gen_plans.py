@@ -20,7 +20,7 @@ COMMENTARY = {
     "q_scalar_subquery": "correlated subquery decorrelated to aggregate + join; no per-row re-execution.",
     "q_join_theta_range": "BroadcastNestedLoopJoin — correct only because the band side is 3 rows; fact-fact ranges must be banded first.",
     "x_dedup_exact_hash": "shuffle carries 32-byte sha256 digests, not documents; partial count before the exchange.",
-    "x_sim_topk_cosine": "queries broadcast; candidate scan is a single pass; ranking window partitioned by query id.",
+    "x_sim_topk_cosine": "query rows are collected at construction and shipped to ONE mapInArrow stage; the candidate scan is a single pass; each batch emits only rows near its k-th best per query, so the ranking window (partitioned by query id) sees a few dozen rows per batch.",
     "q_fn_json": "get_json_object stays inside codegen — the SMT chain as one fused JVM loop, PushedFilters/ReadSchema pruned.",
     "q_sessionize": "lag + running-sum windows and the session rollup share ONE user_id exchange (the rollup's (user, session) clustering is satisfied by the window partitioning).",
     "q_merge_upsert": "the CDC apply is a single FullOuter SortMergeJoin; bucketing the base side on the key removes its exchange for repeated merges.",
@@ -162,9 +162,9 @@ def main() -> None:
 
 
 def _ab_bloom_section() -> list[str]:
-    """Render tools/ab_bloom_results.json (written by tools/ab_bloom.py
-    --record): the measured A/B of the hand-built bloom literal vs
-    Spark's injected runtime bloom filter (VERDICT r4 item 6)."""
+    """Render tools/ab_bloom_results.json: the measured A/B of the
+    hand-built bloom literal vs Spark's injected runtime bloom filter
+    (VERDICT r4 item 6)."""
     import json
     import os
 
@@ -176,11 +176,12 @@ def _ab_bloom_section() -> list[str]:
     out = [
         "## A/B: hand bloom vs AQE injected runtime bloom filter",
         "",
-        "Measured by `tools/ab_bloom.py --record` (median of 3, same",
-        "logical semi-join; `smj_*` variants run with autoBroadcast off to",
-        "stage the dim-outgrows-broadcast regime; runtime-filter",
-        "thresholds lowered to force injection, which local fixture sizes",
-        "never trigger by default). All variants return identical results.",
+        "Measured by `tools/ab_bloom.py --record` (last in commit 59f8317;",
+        "median of 3, same logical semi-join; `smj_*` variants run with",
+        "autoBroadcast off to stage the dim-outgrows-broadcast regime;",
+        "runtime-filter thresholds lowered to force injection, which local",
+        "fixture sizes never trigger by default). All variants return",
+        "identical results.",
         "",
         "| sf dir | broadcast semi | hand bloom (getbit) | SMJ plain | SMJ + injected bloom |",
         "|---|---|---|---|---|",
@@ -218,9 +219,9 @@ def _ab_bloom_section() -> list[str]:
 
 
 def _ab_ann_section() -> list[str]:
-    """Render tools/ab_ann_results.json (written by tools/ab_ann.py
-    --record): the measured A/B of the materialized int8 index vs the r6
-    inline-quantization pipeline (VERDICT r6 item 3)."""
+    """Render tools/ab_ann_results.json: the measured A/B of the
+    materialized int8 index vs the r6 inline-quantization pipeline
+    (VERDICT r6 item 3)."""
     import json
     import os
 
@@ -232,10 +233,11 @@ def _ab_ann_section() -> list[str]:
     out = [
         "## A/B: stored int8 ANN index vs inline re-quantization",
         "",
-        "Measured by `tools/ab_ann.py --record` (median of 3; identical",
-        "result rows asserted across pipeline variants; index build time",
-        "excluded from query medians and shown separately — at 100 TB the",
-        "build runs once at ingest and amortizes over every query).",
+        "Measured by `tools/ab_ann.py --record` (last in commit 59f8317;",
+        "median of 3; identical result rows asserted across pipeline",
+        "variants; index build time excluded from query medians and shown",
+        "separately — at 100 TB the build runs once at ingest and",
+        "amortizes over every query).",
         "",
         "| sf dir | index build | rerank (no prefilter, inline q8) |"
         " pipeline, inline q8 (r6) | pipeline, stored index (r7) |",
@@ -265,8 +267,9 @@ def _ab_ann_section() -> list[str]:
         "contract).  The q8 codes are stored as `array<tinyint>` — the",
         "genuine 4x storage/scan compression — and widened to long inside",
         "the dot-product lambda, so scores are bit-identical to the",
-        "inline form (asserted by the A/B tool and",
-        "tests/test_weak_ops.py).",
+        "inline form (asserted by the A/B tool; tests/test_weak_ops.py",
+        "now checks the stored-index rows against the DuckDB oracle,",
+        "which quantizes inline).",
         "",
     ]
     return out
@@ -275,10 +278,9 @@ def _ab_ann_section() -> list[str]:
 
 
 def _ab_stage_reuse_section() -> list[str]:
-    """Render tools/ab_stage_reuse_results.json (written by
-    tools/ab_stage_reuse.py --record): the measured cost of the AQE
-    no-cross-stage-exchange-reuse trap vs the shipped materialization
-    fixes, including where the fix does NOT pay."""
+    """Render tools/ab_stage_reuse_results.json: the measured cost of
+    the AQE no-cross-stage-exchange-reuse trap vs the shipped
+    materialization fixes, including where the fix does NOT pay."""
     import json
     import os
 
@@ -292,7 +294,8 @@ def _ab_stage_reuse_section() -> list[str]:
     out = [
         "## A/B: AQE cross-stage reuse trap — materialize vs recompute (round 8)",
         "",
-        "Measured by `tools/ab_stage_reuse.py --record` (median of 3 after",
+        "Measured by `tools/ab_stage_reuse.py --record` (last in commit",
+        "59f8317; median of 3 after",
         "a warm run; result parity asserted before timing).  The trap form",
         "recomputes the shared subtree once per AQE stage; the shipped form",
         "materializes it (persist / localCheckpoint).  The decision rule",
@@ -301,11 +304,10 @@ def _ab_stage_reuse_section() -> list[str]:
         "a case on each side of that line: DSIR's token explode is worth",
         "persisting from sf1 up (the bucket counts are tiny vs the token",
         "stream), while retention's column-pruned events scan is cheap",
-        "enough at these tiers that the checkpoint costs ~0.4 s — it is",
-        "kept because it bounds the WORST case (at corpus scale two raw",
-        "scans dominate; the checkpointed relation is ~|users x days|).",
+        "enough at these tiers that the checkpoint costs ~0.4 s, so",
+        "q_retention_cohort ships the rescan form only.",
         "",
-        "| sf dir | DSIR persisted (current) | DSIR recompute (trap form) | retention checkpointed (current) | retention rescan (trap form) |",
+        "| sf dir | DSIR persisted (current) | DSIR recompute (trap form) | retention checkpointed | retention rescan (current) |",
         "|---|---|---|---|---|",
     ]
     for r in recs:
@@ -324,10 +326,9 @@ def _ab_stage_reuse_section() -> list[str]:
 
 
 def _ab_shingles_section() -> list[str]:
-    """Render tools/ab_shingles_results.json (written by
-    tools/ab_shingles.py --record): the measured A/B of the round-8
-    zip_with shingles() rebuild vs the superseded transform-slice form
-    whose lambda re-split the document per array element."""
+    """Render tools/ab_shingles_results.json: the measured A/B of the
+    round-8 zip_with shingles() rebuild vs the superseded transform-slice
+    form whose lambda re-split the document per array element."""
     import json
     import os
 
@@ -341,7 +342,8 @@ def _ab_shingles_section() -> list[str]:
     out = [
         "## A/B: zip_with shingles vs transform-slice (round 8)",
         "",
-        "Measured by `tools/ab_shingles.py --record` (median of 3 after a",
+        "Measured by `tools/ab_shingles.py --record` (last in commit",
+        "59f8317; median of 3 after a",
         "warm run; parity of the exploded (doc_id, shingle) relation is",
         "asserted before timing — the rewrite is purely physical).  The",
         "legacy lambda referenced the outer `split(text)` expression and",

@@ -128,9 +128,8 @@ ALLOWLIST = {
     "x_perplexity_filter": 5,
     "x_seq_pack": 2,
     "x_seq_tensorize": 2,
-    "x_sim_topk_cosine": 2,
     # eval slice + corpus slice of the same table (r12; the
-    # x_sim_topk_cosine query/candidate class — a checkpoint would
+    # x_hard_negatives query/candidate class — a checkpoint would
     # materialize the whole corpus to save a 20-row scan)
     "x_decontaminate_semantic": 2,
     # same disjoint-filter shape as the dense twin: eval probes
@@ -143,7 +142,7 @@ ALLOWLIST = {
     # second scan is exactly the move the class note above rejects)
     "x_ece_calibration": 2,
     # query slice + relevance pass over embeddings (r12; the
-    # x_sim_topk_cosine class verbatim — the greedy itself runs on
+    # x_hard_negatives class verbatim — the greedy itself runs on
     # checkpointed pool-bounded relations)
     "x_embed_mmr_diversify": 2,
     "x_sim_topk_ivf": 2,
